@@ -294,10 +294,9 @@ def _ab_pairs(spark, sf_dir, fn_a, fn_b, reps: int) -> dict:
 
     ta, tb = [], []
     for _ in range(reps):
-        # reset BOTH arms to cold: without it a memoizing query (the
-        # jaccard edge memo) measures the memo hit against the other
-        # arm's full pipeline — the r11 first capture recorded 0.015s
-        # vs 1.7s that way, a cache artifact, not a comparison
+        # reset BOTH arms to cold: without it one arm can read blocks
+        # the other arm cached or checkpointed (scoped_cache,
+        # localCheckpoint) and measure a cache hit, not a comparison
         reset_session_state(spark)
         t0 = time.perf_counter()
         materialize(fn_a(spark, sf_dir))

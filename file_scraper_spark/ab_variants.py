@@ -17,50 +17,17 @@ bench asserts nothing about results — the correctness gate already
 covers the live form and the pair equality was checked when the
 rewrite landed.
 
-Round 13 entries (round-12's arms — the min-label propagation loop
-behind ``dedup_clusters`` and the three r11-tree drift anchors
-(agg_groupby / join_family / window_rank) with their /tmp/r11tree
-snapshot dependency — deleted per the one-round contract; the anchors
-answered the r9–r11 drift question as ambient box load, ratios
-1.04x/0.97x/1.05x on byte-identical code, recorded in BENCH_r12.json
-and NOTES.md; re-add anchors only if a new trend appears):
+Round 14 entries (round 13's fifteen optimization arms deleted per
+the one-round contract; their pairs stay in OPTIMIZATION_r13.md and
+BENCH_LOCAL_r13.json). Each arm's docstring names what it isolates:
 
-Optimization-session entries (each documented in OPTIMIZATION_r13.md
-with its same-JVM 100x pairs): ``text_lm_score`` (marginal derived
-from the bigram model, one corpus join), ``tpch_q21_shape`` (orders
-'F' filter pushed below the join; the single-pass rewrite measured 2x
-slower and was rejected), ``xml_roundtrip`` (declared read-back
-schema vs inference), ``doc_fingerprint`` (vectorized numpy Horner
-kernel vs interpreted HOF fold).
-
-Continuation-session entries (same round, after the first wrap; 100x
-pairs in OPTIMIZATION_r13.md, sf0.1 pairs in the final
-BENCH_LOCAL_r13.json capture): ``text_normalize`` and
-``pipeline_end2end`` (codegen'd double-regex normalization — which
-the plan evaluated twice per row — vs the _norm_bytes byte kernel,
-0.045x/0.073x at 100x), ``dsir_weights`` (two bigram explodes +
-broadcast join + doc_id exchange vs two per-doc kernels around a
-driver-collected fixed-width ratio table, 0.67x),
-``graph_link_predict`` (arm REPOINTED mid-round, see its docstring:
-now cut 3's interpreted-HOF pair expansion vs the per-basket triu
-kernel, 0.28x), ``text_langid`` (five HOF filter lambdas + CASE
-argmax vs one marker-count kernel, 0.61x), ``text_repetition``
-(zip_with bigram concat + array_distinct vs per-doc distinct-tuple
-count, 0.055x).
-
-- ``dedup_winnowing``: round 13 changed this query twice. (a) The
-  tail's forced broadcast of the docs-proportional sizes frame was
-  dropped (VERDICT r12 weak #1; AQE now picks the strategy from
-  runtime sizes) — that pair was measured at ~1.005 and is recorded
-  in BENCH_LOCAL_r13.json's ab section; the verdict's sketched
-  zero-post-pair-join form was built, measured 3x SLOWER at 100x
-  and rejected (NOTES.md r13). (b) The fingerprint stage was then
-  rewritten as a per-doc kernel (3-gram md5, W-window min and the
-  distinct all inside one mapInPandas pass — dedup_minhash's move).
-  THIS arm isolates (b): old exploded fps (posexplode to one row
-  per 3-gram, codegen'd md5, window-min over a doc_id exchange +
-  sort, corpus-sized distinct) feeding the SAME hint-free tail as
-  the live form.
+- ``dedup_winnowing``: the r13 per-doc kernel fingerprint stage,
+  reverted in r14 in favour of the exploded codegen form.
+- ``text_redact``: two per-row Java regexp_replace passes vs the
+  live one-pass mapInArrow RE2 kernel.
+- ``corpus_curriculum`` and ``text_ccnet_buckets``: the rank and
+  tercile pipelines without the keyed-frame localCheckpoint that
+  stops two branches rebuilding the same subtree.
 """
 
 from __future__ import annotations
@@ -170,705 +137,6 @@ def _old_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 AB_BASELINES = {
     "dedup_winnowing": _old_dedup_winnowing,
 }
-
-
-def _old_graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Superseded form, REPOINTED mid-round like the winnowing arm:
-    this is now cut 3 (in-row interpreted-HOF pair expansion), which
-    the continuation session replaced with a per-basket numpy kernel
-    (cut 4, 0.28x same-JVM at 100x). Cut 2 (postings self-join +
-    degree join, four data-sized shuffles) was this arm's first
-    occupant; its pair vs cut 3 (109.4s -> 53.8s, 0.49x) is recorded
-    in NOTES.md and the earlier BENCH_LOCAL_r13 capture."""
-    from file_scraper_spark.operators.graph import RA_SCALE, RA_TOPK
-    from file_scraper_spark.tables import load
-
-    li = load(spark, sf_dir, "lineitem")
-    sets = (
-        li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .groupBy("o")
-        .agg(F.sort_array(F.collect_set("p")).alias("ps"))
-    )
-    pairs = (
-        sets.withColumn("c", F.expr(f"{RA_SCALE} div size(ps)"))
-        .withColumn(
-            "prs",
-            F.expr(
-                "flatten(transform(ps, (x, i) ->"
-                " transform(slice(ps, i + 2, size(ps)),"
-                " y -> struct(x AS u, y AS v))))"
-            ),
-        )
-        .select(F.explode("prs").alias("pr"), "c")
-        .select(F.col("pr.u").alias("u"), F.col("pr.v").alias("v"), "c")
-    )
-    return (
-        pairs.groupBy("u", "v")
-        .agg(
-            F.sum("c").cast("long").alias("ra_q"),
-            F.count(F.lit(1)).cast("long").alias("n_common"),
-        )
-        .orderBy(F.desc("ra_q"), F.asc("u"), F.asc("v"))
-        .limit(RA_TOPK)
-    )
-
-
-AB_BASELINES["graph_link_predict"] = _old_graph_link_predict
-
-
-def _old_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form: 3 corpus-sized explode passes
-    (db + the two model aggregations each re-expanded the corpus) and
-    2 corpus-side joins (bigram model + prefix marginal separately).
-    The live form derives the marginal FROM the bigram model
-    (vocab-sized sum) and pre-joins the model tables, so occurrences
-    pay one explode feeding one aggregation and one join."""
-    from file_scraper_spark.operators.text import _bigrams, _words
-    from file_scraper_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    words = _words()
-    db = (
-        docs.filter(F.size(words) >= 2)
-        .select("doc_id", F.explode(_bigrams(words)).alias("bigram"))
-        .select(
-            "doc_id",
-            "bigram",
-            F.substring_index("bigram", " ", 1).alias("w1"),
-        )
-    )
-    bc = db.groupBy("bigram").agg(F.count(F.lit(1)).alias("bc"))
-    uc = db.groupBy("w1").agg(F.count(F.lit(1)).alias("uc"))
-    p = F.col("bc").cast("double") / F.col("uc").cast("double")
-    return (
-        db.join(bc, "bigram")
-        .join(uc, "w1")
-        .select("doc_id", F.floor(p * F.lit(1000000.0)).alias("p_q"))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.avg("p_q").cast("long").alias("avg_pq"),
-            F.min("p_q").cast("long").alias("min_pq"),
-        )
-    )
-
-
-AB_BASELINES["text_lm_score"] = _old_text_lm_score
-
-
-def _old_tpch_q21_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form: joined ALL lineitem against
-    ALL orders (o_orderstatus carried through the join and filtered
-    only at the l1 branch). The live form pushes the 'F' filter onto
-    orders BEFORE the join (per-orderkey groups are unchanged by
-    dropping other orders, and only F orderkeys are consulted), so
-    every fact-side stage runs on the F fraction (~49%). A full
-    single-pass rewrite (n_late carried through the per_os aggregate,
-    no line-granularity second pass) was ALSO built and A/B-measured:
-    2x SLOWER at 100x (6.4s vs 12.8s min-of-2) — AQE's reuse of the
-    lo exchange makes the second pass nearly free; rejected, numbers
-    in OPTIMIZATION_r13.md."""
-    from file_scraper_spark.tables import load
-
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr(
-        "INTERVAL 60 DAYS"
-    )
-    lo = li.join(
-        orders.select("o_orderkey", "o_orderstatus", "o_orderdate"),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    )
-    per_os = lo.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max(late.cast("int")).alias("any_late")
-    )
-    per_order = per_os.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supp"),
-        F.sum("any_late").alias("n_late_supp"),
-    )
-    nat = load(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 0)
-    supp = load(spark, sf_dir, "supplier").join(
-        F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi"
-    )
-    l1 = (
-        lo.filter((F.col("o_orderstatus") == "F") & late)
-        .join(
-            per_order.withColumnRenamed("l_orderkey", "pk"),
-            F.col("l_orderkey") == F.col("pk"),
-        )
-        .filter((F.col("n_supp") >= 2) & (F.col("n_late_supp") == 1))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-    )
-    return (
-        l1.groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-    )
-
-
-AB_BASELINES["tpch_q21_shape"] = _old_tpch_q21_shape
-
-
-def _old_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form: the read-back side ran XML
-    schema INFERENCE — a full extra parse pass over the written files
-    before the real read. The live form declares the schema like every
-    other roundtrip in io_formats."""
-    from file_scraper_spark.operators.io_formats import _tmpdir
-    from file_scraper_spark.tables import load
-
-    out = _tmpdir("fss_xml_abold_")
-    orders = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus"
-    )
-    (
-        orders.write.mode("overwrite")
-        .format("xml")
-        .option("rowTag", "order")
-        .save(out)
-    )
-    back = (
-        spark.read.format("xml")
-        .option("rowTag", "order")
-        .load(out)
-    )
-    return back.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("o_orderkey").alias("key_sum"),
-    )
-
-
-AB_BASELINES["xml_roundtrip"] = _old_xml_roundtrip
-
-
-def _old_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form: higher-order ``aggregate``
-    fold over ``split(text, '')`` — interpreted lambda per character
-    plus a one-char-string array per document. The live form runs the
-    same exact integer Horner fold batch-vectorized in a numpy
-    mapInPandas kernel."""
-    from file_scraper_spark.operators.text import FP_MOD
-    from file_scraper_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    codes = F.transform(
-        F.split(F.col("text"), ""), lambda c: F.ascii(c).cast("long")
-    )
-    fp = F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + c) % F.lit(FP_MOD),
-    )
-    return docs.select("doc_id", fp.alias("fingerprint"))
-
-
-AB_BASELINES["doc_fingerprint"] = _old_doc_fingerprint
-
-
-def _old_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form of the PORTABLE minhash path:
-    per-shingle JVM expressions (arrays_zip 3-gram strings -> explode
-    one row per shingle -> md5 + hex substring + two conv parses) feed
-    a partial-mins Arrow kernel and a groupBy(doc_id) exchange merges
-    the per-batch partials into signatures. The live form computes the
-    whole per-doc sketch inside one mapInPandas kernel over
-    (doc_id, words) — no explode, no per-shingle Arrow rows, no
-    signature groupBy. Downstream (bands, candidates, verify, expand)
-    is byte-identical to the live query."""
-    from file_scraper_spark.operators.dedup import (
-        MINHASH_BANDS,
-        MINHASH_K,
-        MINHASH_P,
-        _portable_hash2,
-        band_candidates,
-        data_key,
-        exact_collapse,
-        expand_pairs,
-        near_dup_corpus,
-    )
-    from file_scraper_spark.tables import load, scoped_cache
-
-    docs = load(spark, sf_dir, "documents")
-    corpus, members = exact_collapse(
-        near_dup_corpus(docs),
-        cache_key=("neardup", data_key(sf_dir, "documents")),
-    )
-    words = F.col("words")
-    n_grams = F.size(words) - 2
-    zipped = F.arrays_zip(
-        F.slice(words, 1, n_grams).alias("g0"),
-        F.slice(words, 2, n_grams).alias("g1"),
-        F.slice(words, 3, n_grams).alias("g2"),
-    )
-    grams = F.when(
-        F.size(words) >= 3,
-        F.transform(
-            zipped, lambda t: F.concat_ws(" ", t["g0"], t["g1"], t["g2"])
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    sh = corpus.select("doc_id", F.explode(grams).alias("sh"))
-    h1c, h2c = _portable_hash2(F.col("sh"))
-    hashed = sh.select("doc_id", h1c.alias("h1"), h2c.alias("h2"))
-
-    part_schema = "doc_id long, " + ", ".join(
-        f"h{i} long" for i in range(MINHASH_K)
-    )
-
-    def partial_mins(batches):
-        import numpy as np  # noqa: PLC0415
-        import pandas as pd  # noqa: PLC0415
-
-        coeff = np.arange(MINHASH_K, dtype=np.int64)[None, :]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["doc_id"].to_numpy()
-            h1 = pdf["h1"].to_numpy()[:, None]
-            h2 = pdf["h2"].to_numpy()[:, None]
-            A = (h1 + coeff * h2) % MINHASH_P
-            starts = np.flatnonzero(
-                np.concatenate(([True], ids[1:] != ids[:-1]))
-            )
-            M = np.minimum.reduceat(A, starts, axis=0)
-            out = pd.DataFrame(M, columns=[f"h{i}" for i in range(MINHASH_K)])
-            out.insert(0, "doc_id", ids[starts])
-            yield out
-
-    partials = hashed.mapInPandas(partial_mins, part_schema)
-    mins = [F.min(f"h{i}").alias(f"h{i}") for i in range(MINHASH_K)]
-    sigs = scoped_cache(
-        partials.groupBy("doc_id")
-        .agg(*mins)
-        .select(
-            "doc_id",
-            F.array(*[F.col(f"h{i}") for i in range(MINHASH_K)]).alias("sig"),
-        )
-    )
-    rows_per_band = MINHASH_K // MINHASH_BANDS
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        *[
-                            F.element_at("sig", b * rows_per_band + j + 1)
-                            for j in range(rows_per_band)
-                        ]
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-    cand = band_candidates(bands, "band", "band_key")
-    joined = cand.join(
-        sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")),
-        "doc_a",
-    ).join(
-        sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")),
-        "doc_b",
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
-        )
-    )
-    rep_pairs = joined.select(
-        "doc_a",
-        "doc_b",
-        (agree.cast("double") / MINHASH_K).alias("est_jaccard"),
-    ).filter(F.col("est_jaccard") >= 0.4)
-    return expand_pairs(
-        rep_pairs,
-        members,
-        sigs.select(F.col("doc_id").alias("rep")),
-        F.lit(1.0),
-        "est_jaccard",
-    )
-
-
-AB_BASELINES["dedup_minhash"] = _old_dedup_minhash
-
-
-def _old_similarity_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form: BroadcastNestedLoopJoin of
-    the MAXSIM_QN query rows onto the corpus, with the cosines as
-    per-row interpreted ``_dec_fold`` JVM folds — 3 x 64 lambda calls
-    per cross row (dot, norm(v), and norm(q) re-derived EVERY row).
-    The live form fetches the query set driver-side (scan-parameter
-    pattern) and computes the same quantized-fold cosine grid
-    batch-vectorized in one mapInPandas kernel."""
-    from file_scraper_spark.operators.similarity import (
-        MAXSIM_QN,
-        MAXSIM_TOPK,
-        QUANT,
-        cosine,
-    )
-    from file_scraper_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    q4 = emb.filter(F.col("vec_id") < MAXSIM_QN).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    sc = cosine(F.col("embedding"), F.col("qe"))
-    per = (
-        emb.crossJoin(F.broadcast(q4))
-        .select("label", "qid", sc.alias("cos"))
-        .groupBy("label", "qid")
-        .agg(F.max("cos").alias("mc"))
-    )
-    return (
-        per.select(
-            "label",
-            "qid",
-            F.floor(F.col("mc") * F.lit(float(QUANT))).alias("mq"),
-        )
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_qterms"),
-            F.sum("mq").alias("maxsim_q"),
-        )
-        .orderBy(F.col("maxsim_q").desc(), "label")
-        .limit(MAXSIM_TOPK)
-    )
-
-
-AB_BASELINES["similarity_maxsim"] = _old_similarity_maxsim
-
-
-def _old_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form: per-corpus-row interpreted
-    ``cosine()`` JVM folds (3 x 64 lambda calls per row) against the
-    literal query-vector array. The live form runs the same quantized
-    cosine batch-vectorized in one mapInPandas kernel."""
-    from file_scraper_spark.operators.similarity import (
-        cosine,
-        query_vector,
-    )
-    from file_scraper_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    q = query_vector(spark, sf_dir)
-    return (
-        emb.select("vec_id", cosine(F.col("embedding"), q).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
-
-
-AB_BASELINES["similarity_topk"] = _old_similarity_topk
-
-
-def _old_similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form: JVM ``_sign_bucket``
-    projection (N_PLANES interpreted 64-element folds per corpus
-    row), IN-list probe filter, then per-candidate interpreted
-    cosine folds. The live form fuses bucketing + probe filter +
-    rerank into one batch-vectorized kernel pass."""
-    from file_scraper_spark.operators.similarity import (
-        N_PLANES,
-        QUERY_VEC_ID,
-        _sign_bucket,
-        cosine,
-        query_vector,
-    )
-    from file_scraper_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    bucketed = emb.select(
-        "vec_id", "embedding", _sign_bucket(F.col("embedding")).alias("bucket")
-    )
-    q_row = bucketed.filter(F.col("vec_id") == QUERY_VEC_ID).head()
-    q_bucket = q_row["bucket"]
-    probe = [q_bucket] + [q_bucket ^ (1 << p) for p in range(N_PLANES)]
-    q = query_vector(spark, sf_dir)
-    return (
-        bucketed.filter(F.col("bucket").isin(probe))
-        .select("vec_id", cosine(F.col("embedding"), q).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
-
-
-AB_BASELINES["similarity_ann_lsh"] = _old_similarity_ann_lsh
-
-
-def _old_similarity_ann_lsh_batch(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """r13 optimization superseded form: JVM-bucketed corpus joined
-    with a broadcast (queries x 9)-row probe frame, per-candidate
-    interpreted cosine folds. The live form fetches the query rows
-    driver-side and fuses bucketing + probe membership + rerank for
-    all queries into one kernel pass."""
-    from pyspark.sql import Window
-
-    from file_scraper_spark.operators.similarity import (
-        N_PLANES,
-        N_QUERY_BATCH,
-        _sign_bucket,
-        cosine,
-    )
-    from file_scraper_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    bucketed = emb.select(
-        "vec_id", "embedding", _sign_bucket(F.col("embedding")).alias("bucket")
-    )
-    queries = bucketed.filter(F.col("vec_id") < N_QUERY_BATCH).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("qb"),
-    )
-    probes = queries.select(
-        "query_id",
-        "q_emb",
-        F.explode(
-            F.array(
-                F.col("qb"),
-                *[
-                    F.col("qb").bitwiseXOR(F.lit(1 << p))
-                    for p in range(N_PLANES)
-                ],
-            )
-        ).alias("bucket"),
-    )
-    cand = bucketed.join(F.broadcast(probes), "bucket")
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        cosine(F.col("embedding"), F.col("q_emb")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "vec_id", "cosine")
-        .orderBy("query_id", "vec_id")
-    )
-
-
-AB_BASELINES["similarity_ann_lsh_batch"] = _old_similarity_ann_lsh_batch
-# (dedup_cdc_chunks's superseded char-HOF boundary hash is NOT an arm
-# here: a different hash chunks differently, so it fails this module's
-# same-result-set contract — its measured pair lives in
-# PROBE_r13.json["anomalies"]["dedup_cdc_chunks"] instead.)
-
-
-def _old_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form: whole-stage-codegen'd
-    double-regexp_replace pipeline, evaluated TWICE per row (once
-    under length, once under md5 — CollapseProject re-inlines the
-    shared norm subtree). The live form normalizes once per doc in a
-    C-level byte kernel (text._norm_bytes) with no regex at all."""
-    from file_scraper_spark.tables import load
-
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", ""),
-            " +",
-            " ",
-        )
-    )
-    return load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.length(norm).cast("long").alias("norm_len"),
-        F.md5(norm).alias("norm_md5"),
-    )
-
-
-AB_BASELINES["text_normalize"] = _old_text_normalize
-
-
-def _old_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 optimization superseded form: the normalize stage as the
-    codegen'd double-regex pipeline (same expression as
-    _old_text_normalize) feeding the unchanged dedup/gate/split/stats
-    tail. The live form runs the normalize stage per-doc in the
-    _norm_bytes kernel."""
-    from file_scraper_spark.operators.pipeline_ops import hash_bucket
-    from file_scraper_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", ""),
-            " +",
-            " ",
-        )
-    )
-    normed = docs.select(
-        "doc_id",
-        "lang",
-        "n_chars",
-        F.size(F.split("text", " ")).alias("n_words"),
-        F.md5(norm).alias("norm_md5"),
-    )
-    deduped = normed.groupBy("norm_md5").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.min_by("lang", "doc_id").alias("lang"),
-        F.min_by("n_chars", "doc_id").alias("n_chars"),
-        F.min_by("n_words", "doc_id").alias("n_words"),
-    )
-    kept = deduped.filter(F.col("n_words") >= 10).withColumn(
-        "b", hash_bucket(F.col("doc_id"))
-    )
-    split = (
-        F.when(F.col("b") < 80, "train")
-        .when(F.col("b") < 90, "valid")
-        .otherwise("test")
-    )
-    return kept.groupBy(split.alias("split"), "lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum("n_words").alias("total_words"),
-    )
-
-
-AB_BASELINES["pipeline_end2end"] = _old_pipeline_end2end
-
-
-def _old_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 continuation superseded form: two corpus-sized bigram
-    EXPLODES (per-bigram JVM md5 + hex conv each), broadcast ratio
-    join onto the exploded stream, corpus-sized groupBy(doc_id)
-    rollup. The live form runs two per-doc kernels with the
-    fixed-width ratio table collected driver-side (IVF-codebook
-    pattern) — bigrams never leave their task and the only exchange
-    is the <= DSIR_BUCKETS-row bucket aggregation."""
-    from file_scraper_spark.operators.pipeline_ops import (
-        DSIR_BUCKETS,
-        DSIR_SCALE,
-    )
-    from file_scraper_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    words = F.split("text", " ")
-    n2 = F.size(words) - 1
-    zipped = F.arrays_zip(
-        F.slice(words, 1, n2).alias("w1"), F.slice(words, 2, n2).alias("w2")
-    )
-    bigrams = F.when(F.size(words) >= 2, zipped).otherwise(
-        F.array().cast("array<struct<w1:string,w2:string>>")
-    )
-    grams = (
-        docs.select("doc_id", "lang", F.explode(bigrams).alias("g"))
-        .select(
-            "doc_id",
-            "lang",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws(" ", "g.w1", "g.w2")), 1, 10
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % DSIR_BUCKETS
-            ).alias("b"),
-        )
-    )
-    ratios = grams.groupBy("b").agg(
-        F.expr(
-            f"((sum(case when lang = 'en' then 1 else 0 end) + 1)"
-            f" * {DSIR_SCALE}) div (count(1) + {DSIR_BUCKETS // 100})"
-        ).alias("r")
-    )
-    scored = (
-        grams.join(F.broadcast(ratios), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.expr("sum(r) div count(1)").alias("score_q"),
-        )
-    )
-    u = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 10), 16, 10
-    ).cast("long")
-    return scored.select(
-        "doc_id",
-        "n_bigrams",
-        F.col("score_q").cast("long").alias("score_q"),
-        (
-            u * DSIR_SCALE
-            < F.least(F.col("score_q") * 4, F.lit(DSIR_SCALE))
-            * F.lit(1099511627776)
-        )
-        .cast("int")
-        .alias("kept"),
-    )
-
-
-AB_BASELINES["dsir_weights"] = _old_dsir_weights
-
-
-def _old_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 continuation superseded form: five per-language HOF filter
-    lambdas per doc (interpreted) + the nested CASE argmax in JVM
-    expressions. The live form counts marker membership per doc in
-    one kernel pass."""
-    from file_scraper_spark.operators.text import (
-        LANG_MARKERS,
-        _langid_case,
-        _marker_count,
-        _words,
-    )
-    from file_scraper_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    words = _words()
-    scores = {
-        lang: _marker_count(words, markers).alias(f"s_{lang}")
-        for lang, markers in LANG_MARKERS.items()
-    }
-    base = docs.select("doc_id", "lang", *scores.values())
-    score_cols = {lang: F.col(f"s_{lang}") for lang in LANG_MARKERS}
-    return base.select(
-        "doc_id",
-        "lang",
-        "s_en",
-        "s_de",
-        "s_es",
-        "s_fr",
-        "s_zh",
-        _langid_case(score_cols).alias("predicted"),
-    )
-
-
-AB_BASELINES["text_langid"] = _old_text_langid
-
-
-def _old_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 continuation superseded form: zip_with bigram HOF
-    (interpreted lambda + concat allocation per bigram) +
-    array_distinct, all JVM expressions. The live form counts
-    distinct bigram TUPLES per doc in one kernel."""
-    from file_scraper_spark.operators.text import _bigrams, _words
-    from file_scraper_spark.tables import load
-
-    words = _words()
-    bg = (
-        load(spark, sf_dir, "documents")
-        .filter(F.size(words) >= 2)
-        .select("doc_id", _bigrams(words).alias("bigrams"))
-    )
-    n = F.size("bigrams").cast("long")
-    d = F.size(F.array_distinct("bigrams")).cast("long")
-    rep = F.floor(
-        1_000_000.0 * (1.0 - d.cast("double") / n.cast("double"))
-    ).cast("long")
-    return bg.select(
-        "doc_id",
-        n.alias("n_bigrams"),
-        d.alias("n_distinct"),
-        rep.alias("rep_q"),
-    )
-
-
-AB_BASELINES["text_repetition"] = _old_text_repetition
 
 
 def _old_text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:

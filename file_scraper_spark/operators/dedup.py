@@ -31,7 +31,6 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
-import tempfile
 
 import pandas as pd
 
@@ -163,21 +162,9 @@ def near_dup_ids(docs: DataFrame) -> DataFrame:
     )
 
 
-#: Memo for exact_collapse's adaptive duplicate probe. The probe is an
-#: eager Spark action (one ids-only scan) whose answer is a pure
-#: function of the corpus content, and the three sketch queries
-#: (dedup_minhash, dedup_minhash_fast, dedup_simhash) all probe the
-#: SAME derived corpus per fixture dir — so the first build pays the
-#: scan and the rest (including bench reps 2..n and repeated plan
-#: builds) reuse the cached verdict. Keyed by caller-supplied identity
-#: (corpus kind, sf_dir); process-lifetime, like tables.load's cache.
-_DUP_PROBE_CACHE: dict[object, bool] = {}
-
-
 def exact_collapse(
     corpus: DataFrame,
     mode: str | None = None,
-    cache_key: object | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """Collapse exact-duplicate docs to one min-id representative each,
     BEFORE near-dup sketching — the guard against degenerate band
@@ -192,8 +179,8 @@ def exact_collapse(
     ``mode`` selects the branch policy (default: the
     ``FSS_EXACT_COLLAPSE`` env var, else ``"auto"``):
 
-    - ``"auto"``  — probe for duplicates, collapse only if any exist
-      (the probe is memoized per ``cache_key``, see _DUP_PROBE_CACHE).
+    - ``"auto"``  — probe for duplicates on every call, collapse only
+      if any exist.
     - ``"always"`` — collapse unconditionally; no eager probe, plan is
       data-independent. What a production run on web data (30-50%
       exact dups) should pin.
@@ -230,8 +217,6 @@ def exact_collapse(
     algorithm emits every intra-group pair at full agreement and
     cross-group member pairs at their reps' estimate — precisely what
     expansion reconstructs."""
-    import os  # noqa: PLC0415
-
     if mode is None:
         mode = os.environ.get("FSS_EXACT_COLLAPSE", "auto")
     if mode not in ("auto", "always", "never"):
@@ -239,19 +224,14 @@ def exact_collapse(
     if mode == "never":
         return corpus, None
     if mode == "auto":
-        has_dups = _DUP_PROBE_CACHE.get(cache_key) if cache_key is not None else None
-        if has_dups is None:
-            dup_stats = corpus.select(
-                F.xxhash64("words").alias("g1"),
-                F.xxhash64(F.lit(1), "words").alias("g2"),
-            ).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(F.col("g1"), F.col("g2")).alias("nd"),
-            ).first()
-            has_dups = dup_stats.n != dup_stats.nd
-            if cache_key is not None:
-                _DUP_PROBE_CACHE[cache_key] = has_dups
-        if not has_dups:
+        dup_stats = corpus.select(
+            F.xxhash64("words").alias("g1"),
+            F.xxhash64(F.lit(1), "words").alias("g2"),
+        ).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.col("g1"), F.col("g2")).alias("nd"),
+        ).first()
+        if dup_stats.n == dup_stats.nd:
             return corpus, None
     keyed = corpus.select(
         "doc_id",
@@ -550,156 +530,8 @@ def cap_hot_shingles(sh: DataFrame, cap: int = SHINGLE_DF_CAP) -> DataFrame:
     return sh.join(hot, "shingle", "left_anti")
 
 
-
-
-#: Session-scoped memo for the near-dup EDGE LIST: dedup_ngram_jaccard,
-#: dedup_clusters and dedup_cluster_cap all consume the same edge
-#: pipeline (~26s cold at the 100x probe after the round-11 PPJoin
-#: rewrite), and without a memo a session running jaccard + clusters +
-#: cap pays it three times. The memoized
-#: value is the returned frame behind a LAZY localCheckpoint: nothing
-#: eager happens at plan-build; the first caller's action materializes
-#: the (tiny — pairs above threshold) edge list to executor block
-#: storage and every later consumer reads it back instead of replaying
-#: the shingle index. Keyed on (Spark app, data fingerprint, sampling
-#: params) so a rewritten fixture or new session self-invalidates
-#: (tables.data_key); capped to keep long sessions bounded.
-#:
-#: Failure mode (round-8 advisory, documented deliberately):
-#: localCheckpoint TRUNCATES lineage, so once materialized, losing an
-#: executor/block makes every later consumer of the memoized frame
-#: fail instead of recomputing — and entries evicted from this dict
-#: keep their blocks until the JVM ContextCleaner GCs the DataFrame.
-#: On the single-JVM local[N] target both are non-events (no executor
-#: can be lost independently of the whole app; eviction is bounded by
-#: the cap). On a real multi-executor cluster, swap the localCheckpoint
-#: for .persist(StorageLevel.MEMORY_AND_DISK) + explicit .unpersist()
-#: on eviction: the recompute path survives block loss and the result
-#: stays deterministic because the edge pipeline is deterministic
-#: (hash-partitioned aggregations of deterministic inputs, no sampling
-#: nondeterminism — sample_mod selection is hash-based, not RNG-based).
-_EDGES_MEMO: dict[object, DataFrame] = {}
-_EDGES_MEMO_CAP = 8
-#: memo key -> spill dir the memoized frame reads from, for
-#: DISK-BACKED entries only. A memoized DataFrame over the spill is a
-#: plan over parquet files that an external actor can delete between
-#: consumers (clear_edge_spill from another harness, cross-process
-#: eviction) — returning it then fails at ACTION time with
-#: FAILED_READ_FILE (PROBE_r12's one sweep defect). The hit path
-#: validates the backing dir's _KEY before serving such an entry and
-#: falls back to a rebuild when it is gone.
-_EDGES_MEMO_SPILL: dict[object, str] = {}
-
-#: Disk tier under the in-memory memo (round 12, VERDICT r11 #1): the
-#: FULL (unsampled) edge list is one pipeline shared by THREE
-#: registered consumers (dedup_ngram_jaccard, dedup_clusters,
-#: dedup_cluster_cap), and the session memo cannot carry it across
-#: sessions — or across the probe's per-query cold resets, where each
-#: consumer re-paid the ~26s build (43.3/41.4s cold rows, PROBE_r11).
-#: The spill is an explicit materialized intermediate: the first
-#: builder writes the verified pairs (tiny — only pairs above
-#: threshold) to parquet under FSS_EDGE_SPILL_DIR (default: a
-#: per-user tmp dir; set the env var to '' to disable) in an
-#: atomically-renamed keyed subdir, and every later consumer —
-#: including a different process — reads it back instead of replaying
-#: the shingle index. This is exactly what a 100 TB dedup pipeline
-#: does with its near-dup edge list (materialize once, cluster and
-#: act from the artifact), expressed at fixture scale. Key = the data
-#: fingerprint (per-file size+mtime_ns, tables.data_key) plus the
-#: sampling params — NOT the Spark application id, so the artifact is
-#: valid across sessions and self-invalidates on any fixture rewrite.
-#: Only the unsampled key is spilled: sampled variants are probe
-#: levers whose cold rows must keep measuring their own builds.
-#: Retention: newest _EDGE_SPILL_KEEP keys, evicted oldest-mtime.
-_EDGE_SPILL_KEEP = 8
-
-
-def _edge_spill_root() -> str | None:
-    root = os.environ.get("FSS_EDGE_SPILL_DIR")
-    if root == "":
-        return None  # explicit disable
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(), f"fss-edge-spill-{os.getuid()}"
-        )
-    return root
-
-
 def _spill_slug(spill_key: object) -> str:
     return hashlib.md5(repr(spill_key).encode()).hexdigest()[:16]
-
-
-def _spill_dir_valid(d: str, spill_key: object) -> bool:
-    """True iff ``d`` holds a committed spill for exactly this key."""
-    try:
-        with open(os.path.join(d, "_KEY")) as f:
-            return f.read() == repr(spill_key)
-    except OSError:
-        return False
-
-
-def _edge_spill_load(spark: SparkSession, spill_key: object):
-    """Return (frame, dir) for the spilled edge list, or None."""
-    root = _edge_spill_root()
-    if root is None:
-        return None
-    d = os.path.join(root, _spill_slug(spill_key))
-    if not _spill_dir_valid(d, spill_key):
-        return None  # absent, partial, or slug collision: miss
-    return spark.read.parquet(os.path.join(d, "edges")), d
-
-
-def _edge_spill_store(
-    spark: SparkSession, out: DataFrame, spill_key: object
-):
-    """Materialize ``out`` into the spill dir (atomic rename) and
-    return (read-back frame, dir); None when the tier is disabled or
-    the volume is unusable (caller falls back to the memo-only path)."""
-    root = _edge_spill_root()
-    if root is None:
-        return None
-    d = os.path.join(root, _spill_slug(spill_key))
-    tmp = f"{d}.tmp-{os.getpid()}"
-    try:
-        os.makedirs(root, exist_ok=True)
-        _edge_spill_evict(root)
-        # repartition, NOT coalesce: coalesce(8) would fuse into and
-        # shrink the UPSTREAM verify stage to 8 tasks (measured: the
-        # build row ran 57s vs ~30s); the exchange itself is free —
-        # the frame is only the above-threshold pairs
-        out.repartition(8).write.mode("overwrite").parquet(
-            os.path.join(tmp, "edges")
-        )
-        with open(os.path.join(tmp, "_KEY"), "w") as f:
-            f.write(repr(spill_key))
-        os.rename(tmp, d)  # atomic: readers never see a partial spill
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        # lost the rename race (concurrent builder) or unusable volume:
-        # serve whatever key-validated artifact exists, else rebuild
-        return _edge_spill_load(spark, spill_key)
-    return spark.read.parquet(os.path.join(d, "edges")), d
-
-
-def _edge_spill_evict(root: str) -> None:
-    try:
-        subs = sorted(
-            (e for e in os.scandir(root) if e.is_dir()),
-            key=lambda e: e.stat().st_mtime_ns,
-        )
-    except OSError:
-        return
-    for e in subs[: max(0, len(subs) - (_EDGE_SPILL_KEEP - 1))]:
-        shutil.rmtree(e.path, ignore_errors=True)
-
-
-def clear_edge_spill() -> None:
-    """Drop the on-disk edge-list spill (the probe's builder row and
-    tests call this; reset_session_state deliberately does NOT — the
-    spill is a materialized intermediate table, not session state)."""
-    root = _edge_spill_root()
-    if root is not None:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def jaccard_pairs(
@@ -707,17 +539,9 @@ def jaccard_pairs(
     sf_dir: str,
     sample_mod: int | None = None,
     sample_fast: bool = False,
-    memo: str | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard >= threshold) near-dup edge list — shared
     by dedup_ngram_jaccard and the connected-components clusterer.
-
-    ``memo`` (default: the ``FSS_EDGE_MEMO`` env var, else ``"auto"``):
-    ``"auto"`` returns a session-memoized lazily-checkpointed frame
-    (see _EDGES_MEMO) so the edge pipeline runs once per session per
-    (fixture, sampling) key; ``"never"`` always builds the full plan —
-    for plan tooling that must see the real pipeline, mirroring
-    exact_collapse's mode switch.
 
     ``sample_mod=k`` switches to SAMPLED shingle sets: keep only
     shingles whose hash is ≡ 0 (mod k) — see dedup_jaccard_sampled
@@ -765,41 +589,8 @@ def jaccard_pairs(
     cost — the production path; measured: the md5 portable selection
     costs ~as much as the smaller join saves at the 100x probe),
     instead of the md5-derived portable hash DuckDB can replay."""
-    import os  # noqa: PLC0415
-
     if sample_fast and sample_mod is None:
         raise ValueError("sample_fast=True requires sample_mod")
-    if memo is None:
-        memo = os.environ.get("FSS_EDGE_MEMO", "auto")
-    if memo not in ("auto", "never"):
-        raise ValueError(f"jaccard_pairs memo {memo!r}")
-    key = None
-    if memo == "auto":
-        key = (
-            spark.sparkContext.applicationId,
-            data_key(sf_dir, "documents"),
-            sample_mod,
-            sample_fast,
-        )
-        hit = _EDGES_MEMO.get(key)
-        if hit is not None:
-            back = _EDGES_MEMO_SPILL.get(key)
-            if back is None or _spill_dir_valid(back, key[1:]):
-                return hit
-            # the spill backing this memoized frame was deleted
-            # externally (another harness's clear_edge_spill, cross-
-            # process eviction): serving it would FAILED_READ_FILE at
-            # action time — drop the entry and rebuild/reload
-            _EDGES_MEMO.pop(key, None)
-            _EDGES_MEMO_SPILL.pop(key, None)
-        if sample_mod is None:
-            # disk tier: the materialized artifact is session- and
-            # process-independent, so its key drops the app id
-            loaded = _edge_spill_load(spark, key[1:])
-            if loaded is not None:
-                disk, back = loaded
-                _memo_put(key, disk, back)
-                return disk
     docs = load(spark, sf_dir, "documents")
     # group on xxhash64(shingle), not the ~17-char shingle string: the
     # inverted index only needs key EQUALITY and the Jaccard uses
@@ -952,31 +743,7 @@ def jaccard_pairs(
         verified.select("doc_a", "doc_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
-    if key is not None:
-        spilled = (
-            _edge_spill_store(spark, out, key[1:])
-            if sample_mod is None
-            else None
-        )
-        # non-spilled paths stay a LAZY localCheckpoint: nothing eager
-        # happens at plan-build; the first action materializes to
-        # executor block storage for this session only
-        if spilled is not None:
-            out, back = spilled
-        else:
-            out, back = out.localCheckpoint(eager=False), None
-        _memo_put(key, out, back)
     return out
-
-
-def _memo_put(key: object, df: DataFrame, spill_dir: str | None) -> None:
-    if len(_EDGES_MEMO) >= _EDGES_MEMO_CAP:
-        victim = next(iter(_EDGES_MEMO))
-        _EDGES_MEMO.pop(victim)
-        _EDGES_MEMO_SPILL.pop(victim, None)
-    _EDGES_MEMO[key] = df
-    if spill_dir is not None:
-        _EDGES_MEMO_SPILL[key] = spill_dir
 
 
 #: capped inverted index, oracle side: same df <= CAP filter as
@@ -1209,10 +976,18 @@ def _propagate_clusters(
     Labels fall out of the converged star forest for free: child →
     parent, parent → itself, untouched corpus nodes re-enter as
     singletons via one anti-join (near_dup_ids — the id-only corpus
-    derivation, no text scan/shuffle). localCheckpoint per round
-    truncates the loop lineage; on a real multi-executor cluster use
-    checkpoint (reliable storage) so block loss recomputes instead of
-    failing (same trade documented on _EDGES_MEMO)."""
+    derivation, no text scan/shuffle).
+
+    Block-loss caveat: localCheckpoint per round truncates the loop
+    lineage, so once a round is materialized, losing an executor or
+    block makes every later reader of it fail instead of recomputing.
+    On the single-JVM local[N] target that is a non-event (no executor
+    can be lost independently of the whole app). On a real
+    multi-executor cluster swap it for checkpoint() (reliable storage)
+    or persist(MEMORY_AND_DISK): the recompute path survives block
+    loss, and a recompute yields the same labels because every input
+    is deterministic (hash-partitioned aggregations of deterministic
+    data; sampled edge lists select shingles by hash, not by RNG)."""
     e = (
         edges.select(
             F.greatest("doc_a", "doc_b").alias("hi"),
@@ -1761,7 +1536,6 @@ def _portable_sig_batches(batches):
 def minhash_pairs(
     docs: DataFrame,
     portable_hash: bool = True,
-    collapse_key: object | None = None,
 ) -> DataFrame:
     """The dedup_minhash dataflow over an arbitrary documents frame.
 
@@ -1817,9 +1591,7 @@ def minhash_pairs(
     of one doc costs one signature instead of k and never lands k docs
     in one band bucket.
     """
-    corpus, members = exact_collapse(
-        near_dup_corpus(docs), cache_key=collapse_key
-    )
+    corpus, members = exact_collapse(near_dup_corpus(docs))
     words = F.col("words")
     n_grams = F.size(words) - 2
     if portable_hash:
@@ -1963,9 +1735,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the xxhash64 family, skipping the md5 hex round-trip that
     dominates this query's cost."""
     docs = load(spark, sf_dir, "documents")
-    return minhash_pairs(
-        docs, portable_hash=True, collapse_key=("neardup", data_key(sf_dir, "documents"))
-    )
+    return minhash_pairs(docs, portable_hash=True)
 
 
 #: dedup_minhash_fast gate thresholds. The xxhash64 signature family
@@ -2038,9 +1808,7 @@ def dedup_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins to TRUE — a broken hash family, banding, or est filter drops
     the deterministic rates below the bounds and fails the gate."""
     docs = load(spark, sf_dir, "documents")
-    emitted = minhash_pairs(
-        docs, portable_hash=False, collapse_key=("neardup", data_key(sf_dir, "documents"))
-    ).localCheckpoint()
+    emitted = minhash_pairs(docs, portable_hash=False).localCheckpoint()
     sh = shingles(near_dup_corpus(docs)).select(
         "doc_id", F.xxhash64("shingle").alias("sh")
     )
@@ -2185,10 +1953,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     every band bucket at one doc per distinct content."""
     docs = load(spark, sf_dir, "documents")
     corpus, members = exact_collapse(
-        near_dup_corpus(docs).filter(F.size("words") > 0),
-        # own probe key: the size>0 filter makes this a (slightly)
-        # different corpus than minhash's, so don't share its verdict
-        cache_key=("neardup_nonempty", data_key(sf_dir, "documents")),
+        near_dup_corpus(docs).filter(F.size("words") > 0)
     )
 
     # Explode-then-hash-aggregate, NOT nested higher-order lambdas:
@@ -2754,8 +2519,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- maintained corpus index (incremental dedup, round 12) -------------
 
 #: session-scoped memo: data fingerprint -> the three maintained table
-#: names. NOT cleared by reset_session_state — like the edge spill,
-#: the index is a materialized table, not session cache (catalog
+#: names. NOT cleared by reset_session_state — the index is a
+#: materialized table, not session cache (catalog
 #: registrations survive a cache reset too; only a fresh session
 #: rebuilds). Bucket count is the knob a real deployment sizes to its
 #: executor count.
@@ -2782,8 +2547,7 @@ def corpus_shingle_index(
 
     Rebuilding drops every other ``fss_sidx_*`` generation first, so
     the warehouse holds at most one corpus index per table family
-    (plus this one) — the same bounded-retention contract as the edge
-    spill."""
+    (plus this one)."""
     key = data_key(sf_dir, "documents")
     hit = _SIDX_MEMO.get(key)
     if hit is not None and all(

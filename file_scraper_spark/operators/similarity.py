@@ -2,10 +2,12 @@
 
 The embedding column is ``array<float>`` (dim 64). All dot products
 run as JVM higher-order functions (``zip_with`` + ``aggregate``) —
-per-row, no shuffle, whole-stage codegen — with addends cast to
-DECIMAL(38,12) so the fold is exact and order-independent, which makes
-exact-cosine results bit-identical to the DuckDB oracle (see
-registry.py determinism rules).
+per-row, no shuffle, whole-stage codegen — with each addend quantized
+to ``floor(x * 1e9)`` and folded as BIGINT (``_dec_fold``), so the fold
+is exact and order-independent, which makes exact-cosine results
+bit-identical to the DuckDB oracle. Same floor quantization as
+``functions/exact.py`` (``dsum``/``davg``), at 1e-9 instead of 1e-6;
+see registry.py determinism rules.
 
 Scale paths:
 - ``similarity_topk``: brute-force scan vs one query vector — the

@@ -365,8 +365,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the fold (same A/B-proven pattern as the
     clustering/PQ kernels). Same-JVM A/B + plan diff (HOF Generate
     pipeline -> one MapInPandas over (doc_id, text)) in
-    OPTIMIZATION_r13.md; superseded HOF form is this round's
-    ``ab_variants`` arm.
+    OPTIMIZATION_r13.md, which also holds the superseded HOF form's
+    A/B pairs.
 
     Scale shape: one scan, zero shuffles, embarrassingly parallel —
     unchanged from the HOF form; only the per-task execution engine

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from file_scraper_spark.functions.exact import QUANT, dsum, oracle_dsum
 from file_scraper_spark.registry import query
-from file_scraper_spark.tables import data_key, load
+from file_scraper_spark.tables import load
 
 #: bound the LOCF output: spine users 0..LOCF_USERS-1
 LOCF_USERS = 20
@@ -38,16 +38,9 @@ LOCF_USERS = 20
 #: spine is ~87M cells — a type-only cap would still force that.)
 GAPFILL_BROADCAST_CELL_CAP = 250_000
 
-#: memoized (n_types, n_hours) probe per corpus identity (same pattern
-#: and rationale as dedup._DUP_PROBE_CACHE: the verdict is a pure
-#: function of the data, repeated builds shouldn't re-pay the scan)
-_TYPE_CARD_CACHE: dict[object, tuple[int, int]] = {}
-
-
 def gapfill_dense(
     ev: DataFrame,
     broadcast_cell_cap: int = GAPFILL_BROADCAST_CELL_CAP,
-    cache_key: object | None = None,
     probe: str | None = None,
 ) -> DataFrame:
     """Dense (hour, event_type) gap-fill over an (bucket, event_type,
@@ -56,7 +49,7 @@ def gapfill_dense(
 
     Cardinality guard: one cheap probe aggregation
     (exact count_distinct(event_type) + min/max bucket, two pruned
-    columns, memoized per ``cache_key``) bounds the gap-filled grid at
+    columns, run on every call) bounds the gap-filled grid at
     hours x types cells; only under ``broadcast_cell_cap`` is the
     hourly frame broadcast-HINTED (bounded grid, the common telemetry
     case). Past the cap the hint is dropped — Catalyst/AQE keep making
@@ -79,28 +72,22 @@ def gapfill_dense(
     if probe == "never":
         n_cells = 0  # assume bounded: keep the hint, plan is static
     else:
-        stats = _TYPE_CARD_CACHE.get(cache_key) if cache_key is not None else None
-        if stats is None:
-            # EXACT distinct, not approx_count_distinct: the probe is a
-            # one-off memoized scan anyway, and an HLL underestimate
-            # (~2% typical) could put n_cells just under the cap while
-            # the true grid is over it, forcing a broadcast past the
-            # intended bound (round-7 advisory).
-            row = ev.agg(
-                F.count_distinct("event_type").alias("nt"),
-                F.min("bucket").alias("lo"),
-                F.max("bucket").alias("hi"),
-            ).first()
-            n_types = int(row["nt"])
-            hours = (
-                0
-                if row["lo"] is None
-                else int((row["hi"] - row["lo"]).total_seconds() // 3600) + 1
-            )
-            stats = (n_types, hours)
-            if cache_key is not None:
-                _TYPE_CARD_CACHE[cache_key] = stats
-        n_cells = stats[0] * stats[1]
+        # EXACT distinct, not approx_count_distinct: the probe is one
+        # pruned two-column scan anyway, and an HLL underestimate
+        # (~2% typical) could put n_cells just under the cap while
+        # the true grid is over it, forcing a broadcast past the
+        # intended bound (round-7 advisory).
+        row = ev.agg(
+            F.count_distinct("event_type").alias("nt"),
+            F.min("bucket").alias("lo"),
+            F.max("bucket").alias("hi"),
+        ).first()
+        hours = (
+            0
+            if row["lo"] is None
+            else int((row["hi"] - row["lo"]).total_seconds() // 3600) + 1
+        )
+        n_cells = int(row["nt"]) * hours
     bounds = ev.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
     spine = bounds.select(
         F.explode(
@@ -163,7 +150,7 @@ def timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("bucket"), "event_type", "value"
     )
-    return gapfill_dense(ev, cache_key=("gapfill_types", data_key(sf_dir, "events")))
+    return gapfill_dense(ev)
 
 
 def locf_dense_fill(observations: DataFrame, bounds: DataFrame) -> DataFrame:

@@ -9,11 +9,14 @@ it — so there is exactly one list to keep honest.
 Determinism rules every registered query follows (so the driver's
 order-insensitive value-hash against DuckDB is bit-exact):
 
-- Aggregate doubles through ``CAST(x AS DECIMAL(38,6))`` then ``SUM``:
-  decimal addition is exact and associative, so Spark's partial
-  aggregation order cannot perturb the result; the final
-  ``CAST(.. AS DOUBLE)`` of identical decimals is identical in both
-  engines.
+- Sum doubles as quantized integers: each addend becomes
+  ``floor(x * 1e6)`` summed as BIGINT, then cast back to DOUBLE and
+  divided by 1e6 (``dsum``/``davg`` and their DuckDB twins
+  ``oracle_dsum``/``oracle_davg`` in ``functions/exact.py``). floor of
+  a double is exact and BIGINT addition is associative, so Spark's
+  partial aggregation order cannot perturb the result. Do not cast to
+  DECIMAL instead: double->decimal casts round, and Spark (HALF_UP)
+  and DuckDB (half-even) break ties differently.
 - Never ``ROUND`` a raw double (tie-breaking differs between engines);
   use ``floor(x * 10^k) / 10^k`` when truncation is needed.
 - Every window / limit has a total-order tiebreaker (unique key last).

@@ -41,9 +41,10 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def data_key(sf_dir: str, *names: str) -> tuple:
-    """Cheap content fingerprint of fixture tables, for keying
-    process-lifetime memo caches (dedup._DUP_PROBE_CACHE,
-    timeseries._TYPE_CARD_CACHE, dedup's edge-list memo).
+    """Cheap content fingerprint of fixture tables, for keying the
+    maintained-index memos (dedup's _SIDX_MEMO, _BLOOM_IDX_MEMO and
+    _CDCX_MEMO, text's _PIDX_MEMO, clustering's _IVFPQ_IDX_MEMO), which
+    map a corpus to the warehouse tables built from it.
 
     Keying a memo on the PATH alone goes stale when data is rewritten
     at the same path within one process (long-lived test or notebook
@@ -93,9 +94,9 @@ def scoped_cache(df: DataFrame) -> DataFrame:
 
 
 def reset_session_state(spark: SparkSession) -> None:
-    """Return a live session to a COLD state: drop every process-
-    lifetime memo and every cached/checkpointed block so the next
-    query pays its full build cost.
+    """Return a live session to a COLD state: drop every Spark-owned
+    cached/checkpointed block so the next query pays its full build
+    cost.
 
     This is the probe protocol's fixture (tools/probe100x.py --cold):
     PROBE_r9 mixed warm and cold rows (dedup_clusters rode a warm
@@ -106,9 +107,7 @@ def reset_session_state(spark: SparkSession) -> None:
 
     Clears, in order:
     - the single-slot scoped cache (`scoped_cache`);
-    - the operator memo dicts (dup-probe verdicts, edge-list
-      checkpoints, timeseries type-cardinality) — imported lazily to
-      keep tables.py dependency-free;
+    - the stream sinks (`streaming.queries._drain_sinks`);
     - the SQL cache manager (`catalog.clearCache`);
     - every still-persisted RDD via the JVM registry — this is what
       actually frees localCheckpoint blocks, whose lineage-truncated
@@ -117,17 +116,13 @@ def reset_session_state(spark: SparkSession) -> None:
 
     NOT cleared: the OS page cache over the fixture parquet (uniform
     across queries, and a probe box genuinely re-reads hot files) and
-    JIT/codegen state (warm for every query equally after the first).
+    JIT/codegen state (warm for every query equally after the first),
+    and the maintained warehouse indexes (explicit tables, not cache).
     """
     while _SCOPED_CACHE:
         _SCOPED_CACHE.pop().unpersist()
-    from file_scraper_spark.operators import dedup, timeseries  # noqa: PLC0415
     from file_scraper_spark.streaming import queries as _sq  # noqa: PLC0415
 
-    dedup._DUP_PROBE_CACHE.clear()
-    dedup._EDGES_MEMO.clear()
-    dedup._EDGES_MEMO_SPILL.clear()
-    timeseries._TYPE_CARD_CACHE.clear()
     # the one live stream sink (memory view or parquet dir; bounded by
     # _SINK_TABLES, but a cold measurement should not carry even that
     # single result set)

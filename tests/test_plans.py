@@ -10,34 +10,10 @@ from __future__ import annotations
 
 import re
 
-import pytest
-
 from file_scraper_spark import registry
 
 registry._ensure_loaded()
 R = registry.REGISTRY
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _genuine_edge_pipeline(spark):
-    """Plan assertions must see the REAL edge pipeline, not a disk
-    spill or a memo entry another test file populated (possibly from
-    a parquet read of the spill): disable the disk tier and drop the
-    memo once for this module. The first jaccard plan test rebuilds
-    and re-memoizes a lazy in-session frame; later tests ride it."""
-    import os
-
-    from file_scraper_spark.operators import dedup
-
-    prev = os.environ.get("FSS_EDGE_SPILL_DIR")
-    os.environ["FSS_EDGE_SPILL_DIR"] = ""
-    dedup._EDGES_MEMO.clear()
-    yield
-    if prev is None:
-        os.environ.pop("FSS_EDGE_SPILL_DIR", None)
-    else:
-        os.environ["FSS_EDGE_SPILL_DIR"] = prev
-    dedup._EDGES_MEMO.clear()
 
 
 def plan_of(name, spark, sf_dir) -> str:
@@ -466,7 +442,7 @@ def test_collapse_always_builds_no_eager_job(spark, sf_dir, monkeypatch):
     sc = spark.sparkContext
     sc.setJobGroup("plan-build-probe", "no eager jobs during plan build")
     try:
-        df = minhash_pairs(docs, collapse_key=None)
+        df = minhash_pairs(docs)
         df.schema  # analysis only, no execution
     finally:
         sc.setJobGroup(None, None)
@@ -536,10 +512,13 @@ def test_posting_list_lambdas_are_sort_free(spark, sf_dir):
     (minhash bands, jaccard inverted index) must reference the sorted
     member array as a COLUMN, never re-evaluate array_sort per member
     (O(k^2 log k) per bucket — the embedding_quantize inlining class,
-    NOTES r8)."""
+    NOTES r8). Each plan must contain at least one lambda body, so
+    the pin cannot pass vacuously on a plan that hides the pipeline."""
     for name in ("dedup_minhash", "dedup_ngram_jaccard"):
         plan = plan_of(name, spark, sf_dir)
-        for body in _lambda_bodies(plan):
+        bodies = list(_lambda_bodies(plan))
+        assert bodies, f"{name}: no lambda bodies in the executed plan"
+        for body in bodies:
             assert "array_sort" not in body, (
                 f"{name}: array_sort inlined into pair-emission lambda"
             )
