@@ -315,8 +315,8 @@ def _ab_pairs(spark, sf_dir, fn_a, fn_b, reps: int) -> dict:
 
 AMBIENT_NOTE = (
     "single-window absolutes on this box swing ~2x with ambient load; "
-    "only same-JVM interleaved pairs (the 'ab' section / --ab mode) "
-    "support old-vs-new claims"
+    "only same-JVM interleaved pairs (bench.py --ab) support "
+    "old-vs-new claims"
 )
 
 
@@ -360,9 +360,9 @@ def main() -> None:
         load(spark, sf_dir, t).count()
     materialize(queries["topk_sort_limit"](spark, sf_dir))
     # spawn + warm the Python/Arrow worker pool once (pandas+numpy
-    # imports cost several seconds across 32 workers) so mapInPandas
+    # imports cost several seconds across the workers) so mapInPandas
     # queries measure steady state, not interpreter startup
-    spark.range(0, 64, 1, 32).mapInPandas(
+    spark.range(0, 64, 1, spark.sparkContext.defaultParallelism).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
 
@@ -409,30 +409,9 @@ def main() -> None:
                 max(0.0, fam["sec"] - ovh * fam["n"]), 3
             )
 
-    # same-JVM old-vs-new pairs for queries REWRITTEN this round
-    # (ab_variants.AB_BASELINES — superseded forms kept one round):
-    # the artifact carries the interleaved pairs so round-over-round
-    # readers never compare this round's absolutes against last
-    # round's window (the round-6 false-regression mechanism)
-    ab: dict[str, dict] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_AB", "1") != "0":
-        from file_scraper_spark.ab_variants import AB_BASELINES
-
-        ab_reps = int(os.environ.get("SPARK_GRAFT_BENCH_AB_REPS", "3"))
-        for name, old_fn in AB_BASELINES.items():
-            if name not in queries:
-                continue
-            res = _ab_pairs(spark, sf_dir, old_fn, queries[name], ab_reps)
-            ab[name] = {
-                "old_min_sec": res["a_min_sec"],
-                "new_min_sec": res["b_min_sec"],
-                "new_over_old": res["ratio"],
-                "pairs": res["pairs"],
-            }
-
     # Key ORDER is load-bearing: the driver keeps only the last 2000
     # stdout chars (the r8 truncation lost the per-query map). Bulky,
-    # reconstructable sections (families, ab pairs, headline list) go
+    # reconstructable sections (families, headline list) go
     # FIRST; the per-query medians, headline total and vs_prev go LAST
     # so the tail always retains the evidence every regression argument
     # needs. The FULL payload is additionally persisted to
@@ -445,17 +424,6 @@ def main() -> None:
         "families": families,
         "all_total_sec": round(all_total, 3),
     }
-    if ab:
-        out["ab"] = ab
-        out["ab_note"] = AMBIENT_NOTE
-        # VERDICT r12 wrong-#3: drift evidence belongs in THIS artifact.
-        out["drift_anchors"] = (
-            "retired r13: the r12 identical-code same-JVM anchor pairs "
-            "(agg_groupby 1.04x / join_family 0.97x / window_rank 1.05x "
-            "vs the byte-identical r11 tree, BENCH_r12.json ab section) "
-            "settled the r9-r11 headline drift as ambient box load; "
-            "re-add anchors only if a new multi-round trend appears"
-        )
     out["sf"] = float(sf) if sf.replace(".", "").isdigit() else sf
     out["queries"] = timings
     out["value"] = total

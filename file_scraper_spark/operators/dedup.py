@@ -2289,9 +2289,8 @@ def _editdistance_pairs(
     #   O(ceil(m/64)) machine words under Python big-int bitops —
     #   the rare case where an Arrow-batched Python path beats the
     #   JVM expression, because the algorithm (not the runtime) is
-    #   the 30x. (The JVM form `F.levenshtein("ta","tb")` served its
-    #   one A/B round in ab_variants and is retired; BENCH_r09 holds
-    #   the numbers.)
+    #   the 30x. (The JVM form `F.levenshtein("ta","tb")` is retired;
+    #   BENCH_r09 holds the numbers.)
     dist = _myers_dist_udf()(F.col("ta"), F.col("tb"))
     return (
         cand.select(
@@ -3715,109 +3714,20 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winnowing_fp_batches(batches):
-    """Per-doc winnowing fingerprint kernel: the full 3-gram -> md5 ->
-    W-window min -> distinct pipeline for each document inside one
-    mapInPandas pass over (doc_id, words) — the dedup_minhash move
-    (r13) applied to the MOSS fingerprinter.
-
-    SUPERSEDED in r14 (now only the ab_variants arm): quiet-window
-    A/Bs measured it flat at 100x and 1.49x worse at sf0.1 — the r13
-    keep rested on pairs taken under heavy host contention. The
-    exploded codegen form in ``_winnowing_fps_frame`` is live again.
-
-    Bit-exact twin of the exploded form it replaced: the 3-gram
-    string is ``b" ".join`` of the word window — identical UTF-8
-    bytes to ``concat_ws(' ', g0, g1, g2)`` (split() never yields
-    NULL words; empty-string words concatenate identically); h is
-    the big-endian int of md5 digest bytes [0,5) — exactly
-    ``conv(substring(md5(g), 1, 10), 16, 10)`` (the equivalence
-    verified for dedup_minhash's h1, same construction); the window
-    minimum runs only over FULL W-windows (the old ``p + W-1 <= n``
-    guard), i.e. positions 0..n_grams-W, so docs with fewer than
-    W + 2 words (no full window — this subsumes the <3-words
-    no-grams case) emit nothing, exactly like the old explode; the
-    per-doc np.unique is the old distinct (doc_id is unique per
-    corpus row — base ids are table-unique, perturbed ids are their
-    disjoint negative mirror — so per-doc dedup IS the global
-    distinct).
-
-    Why a kernel: the old shape materialized one exploded row PER
-    3-GRAM (~60M at 100x), paid per-gram JVM md5 + hex substring +
-    conv, then a full exchange + per-doc SORT for the window minimum
-    and a 60M-row distinct. All of that collapses into one per-doc
-    loop whose md5 calls are the only per-gram Python cost; the
-    window min is W-1 vectorized np.minimum passes and the distinct
-    a per-doc np.unique, and NOTHING leaves the task but the final
-    ~2/(W+1)-density fingerprint rows."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-    from hashlib import md5  # noqa: PLC0415
-
-    join = b" ".join
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        ids: list = []
-        fps: list = []
-        for doc_id, words in zip(pdf["doc_id"], pdf["words"]):
-            if words is None or len(words) < WIN_W + 2:
-                continue
-            bw = [w.encode() for w in words]
-            digests = b"".join(
-                md5(join(t)).digest()[:5]
-                for t in zip(bw, bw[1:], bw[2:])
-            )
-            B = (
-                np.frombuffer(digests, dtype=np.uint8)
-                .reshape(-1, 5)
-                .astype(np.int64)
-            )
-            h = (
-                (B[:, 0] << 32)
-                | (B[:, 1] << 24)
-                | (B[:, 2] << 16)
-                | (B[:, 3] << 8)
-                | B[:, 4]
-            )
-            m = h[: len(h) - WIN_W + 1].copy()
-            for j in range(1, WIN_W):
-                np.minimum(m, h[j : j + len(m)], out=m)
-            u = np.unique(m)
-            ids.append(np.full(len(u), doc_id, dtype=np.int64))
-            fps.append(u)
-        if ids:
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids),
-                    "fp": np.concatenate(fps),
-                }
-            )
-
-
 def _winnowing_fps_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, fp) winnowing fingerprints, pre-df-gate.
     Split out of _winnowing_kept so plan tooling can dump the
     fingerprint pipeline that the lazy localCheckpoint otherwise
     hides behind a Scan ExistingRDD.
 
-    This is the EXPLODED JVM form, restored in r14: posexplode to one
-    row per 3-gram, codegen'd md5 + conv, W-window minimum over a
-    doc_id exchange + per-doc sort, corpus-sized distinct. The r13
-    per-doc kernel rewrite (``_winnowing_fp_batches``, kept as this
-    round's ab_variants arm) was REVERTED on quiet-window evidence:
-    its only r13 wins were measured under heavy host contention
-    (0.82-0.90x min-of-3, 5/6 pairs), while this round's two quiet
-    3-pair 100x A/Bs split 3-3 with min-of-6 ~1.02 (flat) and the
-    sf0.1 bench pair read 1.49x AGAINST the kernel in all three
-    pairs (BENCH r13/r14 ab sections agree). Mechanism, same as the
-    r14 simhash rejection: the explode+window pipeline is whole-stage
-    codegen and md5-per-3-gram dominates BOTH forms equally, so the
-    kernel only adds the Python boundary. (Historical negative result
-    kept for the record: an in-array spelling — transform(md5) +
-    log-shift zip_with folds, no window — measured 4x WORSE than the
-    explode (384s): CollapseProject re-inlined the md5 transform into
-    every downstream slice, 270 copies in the optimized plan. NOTES.)"""
+    This is the exploded JVM form (posexplode to one row per 3-gram,
+    codegen'd md5 + conv, W-window minimum over a per-doc sort); a
+    per-doc Python kernel measured flat-to-slower against it and was
+    reverted (OPTIMIZATION_r14.md). (Historical negative result kept
+    for the record: an in-array spelling — transform(md5) + log-shift
+    zip_with folds, no window — measured 4x WORSE than the explode
+    (384s): CollapseProject re-inlined the md5 transform into every
+    downstream slice, 270 copies in the optimized plan. NOTES.)"""
     from pyspark.sql import Window  # noqa: PLC0415
 
     docs = load(spark, sf_dir, "documents")

@@ -247,15 +247,15 @@ def _redact_batches(batches):
     adversarial battery (unicode, NULLs, adjacent/overlapping PII,
     `....@....`, `++`, paren/dash runs) — Java == pyarrow-RE2 ==
     DuckDB on every case, plus the registry fuzz's PII-shaped-token
-    corpora. The id%10 digit uses truncated (sign-preserving) modulo,
-    matching both engines on any id sign;
+    corpora. The id%10 digit is ``d - (d / 10) * 10`` with truncated
+    integer division: the sign-preserving modulo of both engines on
+    any id, INT64_MIN included, and NULL stays NULL;
     ``binary_join_element_wise``'s default emit_null reproduces
     concat's NULL propagation, and ``utf8_length`` is
     ``length(text)`` in chars. Output bytes are the input's UTF-8
     with ASCII spans substituted — multi-byte chars pass through
     untouched (ASCII classes cannot match inside a multi-byte
     UTF-8 char)."""
-    import numpy as np  # noqa: PLC0415
     import pyarrow as pa  # noqa: PLC0415
     import pyarrow.compute as pc  # noqa: PLC0415
 
@@ -264,13 +264,12 @@ def _redact_batches(batches):
             continue
         doc_id = batch.column(0)
         text = batch.column(1)
-        d = doc_id.to_numpy(zero_copy_only=False)
-        m = np.where(d >= 0, d % 10, -((-d) % 10))
+        m = pc.subtract(doc_id, pc.multiply(pc.divide(doc_id, 10), 10))
         dirty = pc.binary_join_element_wise(
             "contact user",
             pc.cast(doc_id, pa.string()),
             "@example.com or +1-555-010",
-            pc.cast(pa.array(m, pa.int64()), pa.string()),
+            pc.cast(m, pa.string()),
             " re: ",
             text,
             "",

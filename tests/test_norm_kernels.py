@@ -25,7 +25,8 @@ from file_scraper_spark.operators.pipeline_ops import (
     DSIR_BUCKETS,
     _dsir_bucket_ids,
 )
-from file_scraper_spark.operators.text import _norm_bytes
+from file_scraper_spark.operators.text import _norm_bytes, _redact_batches
+from file_scraper_spark.registry import REGISTRY, _ensure_loaded
 
 #: the unicode shapes each docstring argument names: İ (the one
 #: full-vs-simple lowercase divergence), KELVIN/ANGSTROM signs,
@@ -111,3 +112,28 @@ def test_norm_bytes_and_buckets_null_contract():
     # like the expression forms — the helpers see None only via the
     # kernel guards, and _dsir_bucket_ids owns its None branch.
     assert _dsir_bucket_ids(None) is None
+
+
+def test_redact_kernel_matches_oracle_on_extreme_ids():
+    """text_redact's kernel against DuckDB running the query's own
+    oracle on NULL and extreme ids: the id digit is DuckDB's truncated
+    ``doc_id % 10`` (-8 for INT64_MIN, which a numpy ``%`` round-trip
+    got wrong) and a NULL id stays NULL instead of raising."""
+    import pyarrow as pa
+
+    ids = [None, -(2**63), 2**63 - 1, -17, -10, 0, 7]
+    texts = ["call 555-0100 now", None, "mail a.b@c.io", "x", "", "é 12345678", "y"]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.int64()), pa.array(texts, pa.string())],
+        ["doc_id", "text"],
+    )
+    got = pa.Table.from_batches(list(_redact_batches(iter([batch]))))
+    _ensure_loaded()
+    con = duckdb.connect()
+    con.register("documents", pa.Table.from_batches([batch]))
+    want = con.execute(REGISTRY["text_redact"].oracle).fetchall()
+
+    def key(row):
+        return (row[0] is None, row[0] or 0)
+
+    assert sorted(zip(*got.to_pydict().values()), key=key) == sorted(want, key=key)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from file_scraper_spark import registry
+from tests.conftest import needs_smoke_fixture
 from tools.check_correctness import canonical_rows, duckdb_run, value_hash
 
 registry._ensure_loaded()
@@ -33,6 +34,7 @@ def test_query(name, spark, sf_dir):
         pytest.fail(f"{name}: value hash mismatch, first diffs {diff}")
 
 
+@needs_smoke_fixture
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

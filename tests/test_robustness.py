@@ -4,7 +4,11 @@ philosophy as the reference walk's filter_map_ok, src/fs.rs:88)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
+
+from file_scraper_spark.session import default_cpus
 
 
 def test_ignore_corrupt_parquet_files(spark, sf_dir, tmp_path):
@@ -76,3 +80,16 @@ def test_try_cast_bad_rows_null_not_fail(spark):
     assert [r.n for r in got] == [1, 2, None, None]
     # division by zero (s=2) -> NULL, not error
     assert got[1].d is None
+
+
+def test_session_defaults_to_usable_cores(spark, monkeypatch):
+    """Without SPARK_GRAFT_CPUS the session runs local[N] on the cores
+    this process may use, not a fixed 32 that oversubscribes a small
+    host. Pinned on the helper and on the running session, so no
+    second JVM starts."""
+    if "SPARK_MASTER" not in os.environ:
+        assert spark.sparkContext.master == f"local[{default_cpus()}]"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == "3"

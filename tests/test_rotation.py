@@ -1,74 +1,22 @@
-"""Pins for the driver-gate rotation schedule (VERDICT r6 #1).
+"""Pins for the CORRECTNESS-gate registry order (VERDICT r6 #1).
 
 The driver's CORRECTNESS gate samples the FIRST 50 registered queries,
 so registration order decides which queries ever get a driver row.
-rotation.py holds the per-round window; these tests keep it honest:
-every scheduled name must exist, the round-7 window must consist
-entirely of queries that never had a driver row in rounds 2-6, and
-the schedule (window + round-8 remainder + already-sampled) must
-cover the whole registry so nothing silently falls out of rotation.
+rotation.py derives that order from the CORRECTNESS_r*.json artifacts:
+unverified names first in import order, then verified names stalest
+green round first. These tests pin the artifact parsing, the two-step
+rule on synthetic artifacts, and the rule on the live registry.
 """
 
 from __future__ import annotations
 
 import json
-import os
+
+import pytest
 
 from file_scraper_spark import registry, rotation
 
 registry._ensure_loaded()
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _sampled_rounds_2_to_6() -> set[str]:
-    seen: set[str] = set()
-    for n in range(2, 7):
-        path = os.path.join(REPO, f"CORRECTNESS_r{n:02d}.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                seen |= set(json.load(f))
-    return seen
-
-
-def test_rotation_names_exist_and_unique():
-    names = set(registry.REGISTRY)
-    for lst in (rotation.DRIVER_WINDOW_PRIORITY, rotation.ROUND8_REMAINDER,
-                rotation.RECHECK_FIRST):
-        assert len(lst) == len(set(lst)), "duplicate in rotation list"
-        missing = [n for n in lst if n not in names]
-        assert not missing, f"rotation names not in registry: {missing}"
-    overlap = set(rotation.DRIVER_WINDOW_PRIORITY) & set(
-        rotation.ROUND8_REMAINDER
-    )
-    assert not overlap, f"name in both rotation lists: {overlap}"
-
-
-def test_window_prioritizes_unsampled_queries():
-    """The self-advancing invariant: the registry's head must be every
-    still-unsampled scheduled name in schedule order, and the driver's
-    50-row window must never waste a slot on an already-sampled query
-    while unsampled ones remain. Written against the artifacts on
-    disk, so it keeps holding after each round's CORRECTNESS file
-    lands (the window rotates, the invariant doesn't)."""
-    seen = rotation.sampled_in_prior_rounds()
-    order = list(registry.REGISTRY)
-    expected_head = [
-        n
-        for n in (
-            list(rotation.DRIVER_WINDOW_PRIORITY)
-            + list(rotation.ROUND8_REMAINDER)
-        )
-        if n in registry.REGISTRY and n not in seen
-    ]
-    assert order[: len(expected_head)] == expected_head
-    n_unsampled = sum(1 for n in order if n not in seen)
-    window = order[:50]
-    stale = [n for n in window if n in seen]
-    if n_unsampled >= 50:
-        assert not stale, (
-            f"window wastes slots on already-sampled queries: {stale}"
-        )
-    assert len(rotation.DRIVER_WINDOW_PRIORITY) == 50
 
 
 def test_scan_artifacts_is_conservative(tmp_path):
@@ -131,46 +79,6 @@ def test_recheck_pads_are_stalest_first(tmp_path):
     assert out[2:] == ["q_a", "q_d", "q_b", "q_mid"]
 
 
-def test_recheck_first_lands_behind_unverified_ahead_of_pads(tmp_path):
-    """VERDICT r13 #1: the 16 r13-rewritten queries must get a fresh
-    independent driver row this round. RECHECK_FIRST names are fronted
-    in reorder() output — but only AFTER unverified/latest-red names
-    (the conservative policy keeps its absolute priority) and BEFORE
-    the stalest-green re-check pads."""
-    green = {"rows_match": True, "schema_match": True,
-             "hash_match": True, "err": None}
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
-        "q_pad_old": green, "q_rw": green}))
-    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({
-        "q_pad_new": green,
-        "q_red": {"rows_match": False, "err": None}}))
-    fake = {n: object() for n in
-            ("q_pad_new", "q_rw", "q_red", "q_pad_old", "q_never")}
-    orig = rotation.RECHECK_FIRST
-    rotation.RECHECK_FIRST = ("q_rw",)
-    try:
-        out = list(rotation.reorder(fake, root=str(tmp_path)))
-    finally:
-        rotation.RECHECK_FIRST = orig
-    # unverified first (import order), then the rewrite re-check,
-    # then pads stalest-green first
-    assert out == ["q_red", "q_never", "q_rw", "q_pad_old", "q_pad_new"]
-
-
-def test_live_window_rechecks_the_r13_rewrites():
-    """On the real artifacts (all 242 queries verified green), the
-    driver's 50-row r14 window must open with the 16 r13 rewrites so
-    CORRECTNESS_r14 independently re-hashes every kernel rewrite."""
-    order = list(registry.REGISTRY)
-    head = order[: len(rotation.RECHECK_FIRST)]
-    missing = [n for n in rotation.RECHECK_FIRST if n not in order[:50]]
-    if not rotation.sampled_in_prior_rounds() - set(order):
-        # guard stays vacuous if artifacts are absent in a bare checkout
-        pass
-    assert not missing, f"rewrites outside the 50-row window: {missing}"
-    assert set(head) <= set(order[:50])
-
-
 def test_scan_artifacts_sorts_rounds_numerically(tmp_path):
     """Round-8 advisory: artifact recency must follow the PARSED round
     number, not lexicographic filename order — at r100+ a newer red
@@ -190,15 +98,18 @@ def test_scan_artifacts_sorts_rounds_numerically(tmp_path):
     )
 
 
-def test_schedule_covers_entire_registry():
-    seen = _sampled_rounds_2_to_6()
-    scheduled = (
-        set(rotation.DRIVER_WINDOW_PRIORITY)
-        | set(rotation.ROUND8_REMAINDER)
-        | seen
-    )
-    uncovered = set(registry.REGISTRY) - scheduled
-    assert not uncovered, (
-        "queries outside the rotation schedule would never get a "
-        f"driver CORRECTNESS row: {sorted(uncovered)}"
-    )
+def test_live_registry_puts_unverified_before_verified():
+    """On the real artifacts the registry is a permutation of every
+    registered query, no verified name precedes an unverified one, and
+    the verified names run stalest green round first."""
+    art = rotation.scan_artifacts()
+    if not art:
+        pytest.skip("no CORRECTNESS_r*.json artifacts in this checkout")
+    order = list(registry.REGISTRY)
+    assert all(spec.name == n for n, spec in registry.REGISTRY.items())
+    # the live order is the rule applied: re-deriving it changes nothing
+    assert list(rotation.reorder(registry.REGISTRY)) == order
+    verified = [art.get(n, (False, 0))[0] for n in order]
+    assert verified == sorted(verified), "verified name ahead of unverified"
+    rounds = [art[n][1] for n, v in zip(order, verified) if v]
+    assert rounds == sorted(rounds)

@@ -144,6 +144,27 @@ def test_scrape_fs_special_char_filenames(spark, tmp_path):
         assert rows[n].path == str(tmp_path)
 
 
+def test_scrape_fs_keeps_zero_byte_files(spark, tmp_path):
+    """An empty file scrapes like any other, with size 0. A binaryFile
+    scan skips zero-length files, so a scrape used to miss them and
+    read a file truncated to 0 bytes as deleted. The odd names pin the
+    listing's parse of file statuses."""
+    sizes = {
+        "empty.txt": 0,
+        "full.txt": 3,
+        "semi; isDirectory=true; length=5": 0,
+        "new\nline.txt": 1,
+    }
+    for name, n in sizes.items():
+        (tmp_path / name).write_bytes(b"x" * n)
+    (tmp_path / "no_files").mkdir()
+
+    rows = scrape_fs(spark, str(tmp_path), identifier="t").collect()
+    assert {r.filename: r.size for r in rows} == sizes
+    assert all(r.created is not None and r.modified is not None for r in rows)
+    assert list_files(spark, str(tmp_path / "no_files")).count() == 0
+
+
 def test_enrich_created_decodes_encoded_listing(spark, tmp_path):
     """If an upstream listing hands percent-ENCODED paths (older
     Spark/Hadoop file-source behavior: space -> %20), the stat

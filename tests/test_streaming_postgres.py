@@ -16,6 +16,7 @@ from file_scraper_spark.streaming.scrape_stream import (
     scrape_stream,
     scrape_stream_pylisting,
 )
+from tests.conftest import needs_smoke_fixture
 from tests.pg_harness import PgCluster, pg_available
 
 pytestmark = pytest.mark.skipif(
@@ -170,6 +171,7 @@ def test_scrape_stream_failure_rolls_back_whole_scrape(
     assert len(fetch(cluster)) == 5
 
 
+@needs_smoke_fixture
 def test_band_index_stream_to_postgres(spark, cluster):
     """stream_minhash_dedup_upsert against REAL Postgres through the
     psql shim: the parquet-ingest path fails server-side (no
